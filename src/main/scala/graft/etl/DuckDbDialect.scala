@@ -6,8 +6,9 @@ import org.apache.spark.sql.types._
 
 /** JDBC dialect for DuckDB (Spark has none built in): correct DDL type
   * mapping (Spark's defaults emit BIT(1)/TEXT, which DuckDB rejects or
-  * mis-types) and not-found classification so `tableExists` probes are
-  * treated as "missing table" instead of fatal errors.
+  * mis-types), BIGINT read back as a long, and not-found classification
+  * so `tableExists` probes are treated as "missing table" instead of
+  * fatal errors.
   */
 object DuckDbDialect extends JdbcDialect {
   override def canHandle(url: String): Boolean = url.startsWith("jdbc:duckdb")
@@ -30,6 +31,15 @@ object DuckDbDialect extends JdbcDialect {
     case d: DecimalType => Some(JdbcType(s"DECIMAL(${d.precision},${d.scale})", java.sql.Types.DECIMAL))
     case _ => None
   }
+
+  /** duckdb_jdbc 1.0 reports every column as unsigned
+    * (`ResultSetMetaData.isSigned` is always false), so Spark's default
+    * maps BIGINT to DECIMAL(20,0) — a type the xlsx sink cannot write.
+    * A DuckDB BIGINT is signed 64-bit: it is a long. */
+  override def getCatalystType(sqlType: Int, typeName: String, size: Int,
+                               md: MetadataBuilder): Option[DataType] =
+    if (sqlType == java.sql.Types.BIGINT && typeName.equalsIgnoreCase("BIGINT")) Some(LongType)
+    else None
 
   override def isObjectNotFoundException(e: SQLException): Boolean = {
     val m = Option(e.getMessage).getOrElse("")

@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.xlsx.XlsxSink
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Command-line entry with the reference tool's UX: load every sheet of
@@ -17,10 +18,12 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   *     --master URL     Spark master (default local[*])
   * }}}
   *
-  * The heavy lifting is [[XlsxToDatabase]] and the distributed xlsx
-  * sink; this wrapper only parses arguments and owns the SparkSession
-  * lifecycle, so the same paths are callable as a library (tests,
-  * notebooks) or as a batch job.
+  * The heavy lifting is [[XlsxToDatabase]] (a workbook's sheets staged
+  * concurrently and committed in one DuckDB transaction) and the
+  * distributed xlsx sink ([[XlsxSink]], whose committed row count the
+  * export reports); this wrapper only parses arguments and owns the
+  * SparkSession lifecycle, so the same paths are callable as a library
+  * (tests, notebooks) or as a batch job.
   */
 object Main {
 
@@ -72,11 +75,11 @@ object Main {
       XlsxToDatabase.load(spark, a.xlsx, a.url, a.mode, onlySheets = a.sheets,
         upsertKeys = a.upsertKeys)
     case Some(table) =>
-      // reverse direction: JDBC table → workbook directory at a.xlsx
+      // reverse direction: JDBC table → workbook directory at a.xlsx; the
+      // row count is the sink's own, so the table is read exactly once
       val df = XlsxToDatabase.readJdbc(spark, a.url, table)
-      df.write.format("xlsx").mode(a.mode)
-        .option("sheet", XlsxToDatabase.sanitizeTableName(table)).save(a.xlsx)
-      Seq(XlsxToDatabase.LoadedTable(table, a.xlsx, df.count()))
+      val rows = XlsxSink.write(df, a.xlsx, a.mode, XlsxToDatabase.sanitizeTableName(table))
+      Seq(XlsxToDatabase.LoadedTable(table, a.xlsx, rows))
   }
 
   def main(argv: Array[String]): Unit = {

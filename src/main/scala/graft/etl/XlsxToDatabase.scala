@@ -9,10 +9,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * and sanitized table/column names.
   *
   * Spark-first shape: each sheet becomes a DataFrame via the custom DSv2
-  * xlsx source (schema inference + column pruning live there), and the
-  * write is `df.write.jdbc` — batched inserts, per-partition connections,
-  * retry/txn semantics from Spark's JDBC sink. At scale the same call
-  * fans out one writer task per partition.
+  * xlsx source (schema inference + column pruning live there). On a
+  * DuckDB URL the sheets are staged as parquet concurrently and land in
+  * ONE transaction per workbook (see [[DuckDbBulkLoad]]): a load either
+  * commits every chosen sheet or leaves the database as it was. Other
+  * URLs go through Spark's generic JDBC sink, one sheet at a time.
   */
 object XlsxToDatabase {
 
@@ -39,7 +40,8 @@ object XlsxToDatabase {
     * tool's append/replace switch; `onlySheets` restricts to named
     * sheets (default: every sheet, one table each); `upsertKeys`
     * switches to key-idempotent upsert semantics (see [[upsert]] —
-    * `mode` is then ignored). */
+    * `mode` is then ignored). Without `upsertKeys`, a load into DuckDB
+    * is one transaction: every chosen sheet lands, or none does. */
   def load(spark: SparkSession, xlsxPath: String, jdbcUrl: String,
            mode: SaveMode = SaveMode.Overwrite,
            connectionProps: Properties = new Properties(),
@@ -55,16 +57,24 @@ object XlsxToDatabase {
           s"no such sheet(s): ${missing.mkString(", ")}; have ${all.mkString(", ")}")
         all.filter(w.contains)
     }
-    chosen.map { sheet =>
-      val df = readSheet(spark, xlsxPath, sheet)
-      val table = sanitizeTableName(sheet)
-      val loaded = upsertKeys match {
-        case Some(keys) => upsert(df, jdbcUrl, table, keys, connectionProps); df.count()
-        case None => DuckDbBulkLoad.write(df, jdbcUrl, table, mode, connectionProps)
+    val tables = chosen.map(sanitizeTableName)
+    val rows = upsertKeys match {
+      case Some(keys) => chosen.zip(tables).map { case (sheet, table) =>
+        upsert(readSheet(spark, xlsxPath, sheet), jdbcUrl, table, keys, connectionProps)
       }
-      LoadedTable(sheet, table, loaded)
+      case None => DuckDbBulkLoad.writeAll(spark, jdbcUrl, chosen.zip(tables).map { case (sheet, table) =>
+        DuckDbBulkLoad.Target(table, mode, () => readSheet(spark, xlsxPath, sheet))
+      }, connectionProps)
     }
+    chosen.lazyZip(tables).lazyZip(rows).map(LoadedTable)
   }
+
+  /** Test failpoint: invoked between the staging write and the merge —
+    * the most dangerous instant of an upsert (parallel work done,
+    * nothing committed). The crash-recovery spec points this at a
+    * throwing closure to kill a streaming batch exactly there and prove
+    * the end state survives the replay. Production never sets it. */
+  private[graft] var interruptAfterStage: () => Unit = () => ()
 
   /** Key-idempotent load — the missing third mode next to replace and
     * append: rows whose key already exists are UPDATED (replaced), new
@@ -73,22 +83,18 @@ object XlsxToDatabase {
     * needs (replace loses history, append duplicates it).
     *
     * Scale shape: the DataFrame is written to a STAGING table through
-    * Spark's normal parallel JDBC sink (one writer per partition — the
-    * only part that scales with data volume), then the merge is ONE
+    * [[DuckDbBulkLoad.write]] (the parallel Spark write is the only part
+    * that scales with data volume), then the merge is ONE
     * set-based transaction in the target database (DELETE … USING
     * staging + INSERT … SELECT), so per-row logic never runs on the
     * driver and the target table is never observable half-merged.
     * Standard dialect SQL only — no PRIMARY KEY requirement on the
-    * target (DuckDB cannot ALTER one in later). */
-  /** Test failpoint: invoked between the staging write and the merge —
-    * the most dangerous instant of an upsert (parallel work done,
-    * nothing committed). The crash-recovery spec points this at a
-    * throwing closure to kill a streaming batch exactly there and prove
-    * the end state survives the replay. Production never sets it. */
-  private[graft] var interruptAfterStage: () => Unit = () => ()
-
+    * target (DuckDB cannot ALTER one in later).
+    *
+    * Returns the number of rows staged — the frame's row count, taken
+    * from the staging write, so callers need no second scan of `df`. */
   def upsert(df: DataFrame, jdbcUrl: String, table: String, keys: Seq[String],
-             connectionProps: Properties = new Properties()): Unit =
+             connectionProps: Properties = new Properties()): Long =
     try upsertOnce(df, jdbcUrl, table, keys, connectionProps)
     catch {
       // Observed under load (flaky, ~1/500 suite runs): Spark's JDBC
@@ -117,7 +123,7 @@ object XlsxToDatabase {
   }
 
   private def upsertOnce(df: DataFrame, jdbcUrl: String, table: String, keys: Seq[String],
-             connectionProps: Properties): Unit = {
+             connectionProps: Properties): Long = {
     DuckDbDialect.registered
     require(keys.nonEmpty, "upsert requires at least one key column")
     val missing = keys.filterNot(df.columns.contains)
@@ -135,7 +141,7 @@ object XlsxToDatabase {
     try {
       val st = conn.createStatement()
       try {
-        DuckDbBulkLoad.write(df, jdbcUrl, staging, SaveMode.Overwrite, connectionProps)
+        val staged = DuckDbBulkLoad.write(df, jdbcUrl, staging, SaveMode.Overwrite, connectionProps)
         interruptAfterStage()
         val exists = {
           // base tables in the CURRENT schema only: a same-named view or a
@@ -174,6 +180,7 @@ object XlsxToDatabase {
             case e: Throwable => conn.rollback(); throw e
           } finally conn.setAutoCommit(true)
         }
+        staged
       } finally {
         // always drop staging — merge failure AND half-written staging
         // alike (the write runs inside this try, so no failure path can

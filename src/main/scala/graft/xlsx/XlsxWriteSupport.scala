@@ -45,7 +45,10 @@ import scala.jdk.CollectionConverters._
   *    boolean, timestamp, date; null → blank cell. Others are rejected
   *    before any task runs, matching what the reader can round-trip;
   *  - an empty DataFrame still writes one header-only workbook so the
-  *    schema round-trips.
+  *    schema round-trips;
+  *  - [[XlsxSink.write]] returns the number of rows it committed, summed
+  *    once per partition id, so callers need not re-read the source to
+  *    report it.
   */
 object XlsxSink {
   val MaxRowsPerSheet: Int = 1048575 // sheet limit minus the header row
@@ -84,7 +87,7 @@ object XlsxSink {
         (f.getName.endsWith(".staging") || f.getName.endsWith(".staged")))
       .toSeq
 
-  def write(df: DataFrame, dir: String, mode: SaveMode, sheet: String): Unit = {
+  def write(df: DataFrame, dir: String, mode: SaveMode, sheet: String): Long = {
     checkSchema(df.schema)
     val d = new File(dir)
     require(!d.isFile, s"xlsx sink target $dir exists and is a file, not a directory")
@@ -93,7 +96,7 @@ object XlsxSink {
       case SaveMode.ErrorIfExists if old.nonEmpty =>
         throw new IllegalStateException(
           s"$dir already contains ${old.size} workbook(s) (mode=ErrorIfExists)")
-      case SaveMode.Ignore if old.nonEmpty => return
+      case SaveMode.Ignore if old.nonEmpty => return 0L
       case _ =>
     }
     if (!d.exists()) require(d.mkdirs(), s"cannot create output directory $dir")
@@ -116,16 +119,17 @@ object XlsxSink {
     // with the same names as the previous run's and then delete them as
     // "pre-existing"
     val jobId = java.util.UUID.randomUUID().toString.take(8)
-    // records which partitions actually produced a workbook, so the
-    // driver commit can PROVE it promoted one file per non-empty
-    // partition — without this, a .staged file deleted out from under
-    // the job (crash cleanup, concurrent sweep, operator error) would
-    // turn into a silently incomplete "successful" write
-    val nonEmpty = df.sparkSession.sparkContext.collectionAccumulator[Int]("xlsxNonEmptyParts")
+    // records which partitions actually produced a workbook, and how
+    // many rows, so the driver commit can PROVE it promoted one file per
+    // non-empty partition — without this, a .staged file deleted out
+    // from under the job (crash cleanup, concurrent sweep, operator
+    // error) would turn into a silently incomplete "successful" write.
+    // A duplicate attempt adds its partition a second time with the same
+    // count; keying by partition id counts it once.
+    val nonEmpty = df.sparkSession.sparkContext.collectionAccumulator[(Int, Long)]("xlsxNonEmptyParts")
     df.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.hasNext) {
         val ctx = TaskContext.get()
-        nonEmpty.add(ctx.partitionId())
         // attempt id in the hidden names: concurrent attempts of the
         // same partition must not clobber each other's files
         val base = f".part-${ctx.partitionId()}%05d-$jobId-a${ctx.taskAttemptId()}.xlsx"
@@ -138,6 +142,7 @@ object XlsxSink {
           buf += r.toSeq
         }
         XlsxWriter.write(staging.getPath, Seq(XlsxWriter.Sheet(sheet, header, buf.toSeq)))
+        nonEmpty.add(ctx.partitionId() -> buf.length.toLong)
         // completion marker: the atomic rename is the task's commit —
         // an attempt killed mid-write never produces a .staged file
         val done = new File(dir, s"$base.staged")
@@ -155,7 +160,8 @@ object XlsxSink {
         case Staged(pid) => Some(pid -> f)
         case _ => None
       })
-    val expected = nonEmpty.value.asScala.map(i => f"$i%05d").toSet
+    val parts = nonEmpty.value.asScala.toMap
+    val expected = parts.keySet.map(i => f"$i%05d")
     val present = staged.map(_._1).toSet
     require(expected.subsetOf(present),
       s"xlsx commit is missing staged output for partition(s) " +
@@ -187,5 +193,6 @@ object XlsxSink {
     hiddenLitter(d).filter(_.getName.contains(s"-$jobId-"))
       .foreach(f => require(f.delete() || !f.exists(),
         s"cannot remove leftover staging file $f"))
+    parts.values.sum
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -22,17 +23,29 @@ class GraftSessionSpec extends AnyFunSuite with Matchers {
     GraftSession.cpus shouldBe sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
   }
 
+  /** The project's main sources, found from where the compiled classes
+    * live (never the working directory): the first ancestor of the class
+    * output that holds `src/main/scala/graft`. */
+  private lazy val mainSources: Path = {
+    val classes = Paths.get(GraftSession.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(classes.toAbsolutePath)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve("src/main/scala/graft"))
+      .find(p => Files.isRegularFile(p.resolve("GraftSession.scala")))
+      .getOrElse(fail(s"no src/main/scala/graft above $classes"))
+  }
+
+  private def source(name: String): String =
+    new String(Files.readAllBytes(mainSources.resolve(s"$name.scala")), "UTF-8")
+
   test("the AQE floor honors its A/B override env var") {
     // cannot set env in-process; pin the lookup key by reading the source
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/GraftSession.scala")), "UTF-8")
-    src should include("SPARK_GRAFT_MIN_PARTITION_SIZE")
-    // and the mains all build here: no main re-declares the floor
+    source("GraftSession") should include("SPARK_GRAFT_MIN_PARTITION_SIZE")
+    // and the mains all build here: no main sets an AQE conf of its own
     Seq("Bench", "Verify", "PlanDump").foreach { main =>
-      val body = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"src/main/scala/graft/$main.scala")), "UTF-8")
+      val body = source(main)
       body should include("GraftSession.build()")
-      body should not include "minPartitionSize"
+      body should not include regex ("""\.(config|set|setConf)\(\s*"spark\.sql\.adaptive""")
+      body should not include "\"spark.sql.adaptive.coalescePartitions.minPartitionSize\""
     }
   }
 }

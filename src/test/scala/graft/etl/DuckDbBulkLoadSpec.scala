@@ -5,10 +5,13 @@ import graft.TestSpark
 import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+import scala.jdk.CollectionConverters._
 
 /** SaveMode parity of the DuckDB bulk fast path (staged parquet +
   * set-based CTAS/INSERT) with Spark's generic JDBC sink semantics —
-  * the contract XlsxToDatabase.load/upsert now rides on. */
+  * the contract XlsxToDatabase.load/upsert now rides on — and the batch
+  * shape of that path: concurrent staging under the caller's job group,
+  * one transaction for the whole batch. */
 class DuckDbBulkLoadSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
 
@@ -101,5 +104,58 @@ class DuckDbBulkLoadSpec extends AnyFunSuite with Matchers {
       rs.next(); rs.getString(1) shouldBe "v1"; rs.getLong(2) shouldBe 1L
       rs.next(); rs.getString(1) shouldBe "v2"; rs.getLong(2) shouldBe 2L
     } finally c2.close()
+  }
+
+  test("a batch stages concurrently, every staging job under the caller's job group") {
+    val url = freshUrl()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).mkString(",") ->
+          Option(e.properties.getProperty("spark.jobGroup.id")).orNull)
+    }
+    val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def target(t: String, n: Int) = DuckDbBulkLoad.Target(t, SaveMode.Overwrite,
+      () => { threads.add(Thread.currentThread().getName); df(n) })
+    sc.addSparkListener(listener)
+    sc.setJobGroup("bulk-batch-group", "batch staging")
+    try {
+      DuckDbBulkLoad.writeAll(spark, url, Seq(target("a", 3), target("b", 5), target("c", 7))) shouldBe
+        Seq(3L, 5L, 7L)
+    } finally sc.clearJobGroup()
+    // listener events arrive asynchronously
+    def staging = jobs.asScala.toSeq.filter(_._1.contains("DuckDbBulkLoad"))
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (staging.size < 3 && System.nanoTime() < deadline) Thread.sleep(20)
+    sc.removeSparkListener(listener)
+    staging.size shouldBe 3
+    all(staging.map(_._2)) shouldBe "bulk-batch-group"
+    threads.size shouldBe 3 // one staging thread per table (defaultParallelism is 4)
+    Seq("a", "b", "c").map(tableRows(url, _).size) shouldBe Seq(3, 5, 7)
+  }
+
+  test("a failure while staging or committing leaves the database unchanged and no staging dir") {
+    val url = freshUrl()
+    val parent = Files.createTempDirectory("bulk_batch_staging")
+    DuckDbBulkLoad.write(df(2), url, "keep", SaveMode.Overwrite) shouldBe 2L
+    // staging failure: a FAILFAST read of a malformed sheet
+    val book = parent.getParent.resolve(s"${parent.getFileName}_bad.xlsx").toString
+    graft.xlsx.XlsxWriter.write(book, Seq(graft.xlsx.XlsxWriter.Sheet("S", Seq("v"),
+      Seq(Seq(1.0), Seq("not a number")))))
+    def malformed() = spark.read.format("xlsx").option("mode", "FAILFAST")
+      .option("sampleRows", 1).load(book)
+    an[Exception] should be thrownBy DuckDbBulkLoad.writeAll(spark, url, Seq(
+      DuckDbBulkLoad.Target("keep", SaveMode.Overwrite, () => df(9, 100)),
+      DuckDbBulkLoad.Target("bad", SaveMode.Overwrite, () => malformed())),
+      stagingParent = Some(parent))
+    // commit failure: the second table's ErrorIfExists rolls back the first's replace
+    an[IllegalStateException] should be thrownBy DuckDbBulkLoad.writeAll(spark, url, Seq(
+      DuckDbBulkLoad.Target("keep", SaveMode.Overwrite, () => df(9, 100)),
+      DuckDbBulkLoad.Target("keep", SaveMode.ErrorIfExists, () => df(1))),
+      stagingParent = Some(parent))
+    tableRows(url, "keep") shouldBe Seq(1L, 2L)
+    an[Exception] should be thrownBy tableRows(url, "bad")
+    parent.toFile.listFiles() shouldBe empty
   }
 }

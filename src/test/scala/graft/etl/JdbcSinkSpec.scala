@@ -202,4 +202,107 @@ class JdbcSinkSpec extends AnyFunSuite with Matchers {
     XlsxToDatabase.load(spark, xlsx, url, SaveMode.Append)
     XlsxToDatabase.readJdbc(spark, url, "s").count() shouldBe 2
   }
+
+  private def dump(url: String, table: String): Seq[String] = {
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(s"""SELECT * FROM "$table"""")
+      val n = rs.getMetaData.getColumnCount
+      val out = scala.collection.mutable.ArrayBuffer[String]()
+      while (rs.next()) out += (1 to n).map(i => String.valueOf(rs.getObject(i))).mkString("|")
+      out.toSeq.sorted
+    } finally c.close()
+  }
+
+  test("a 3-sheet workbook loads in one call: tables in sheet order, exact counts") {
+    val dir = Files.createTempDirectory("etl8")
+    val xlsx = dir.resolve("book.xlsx").toString
+    val url = s"jdbc:duckdb:${dir.resolve("t.duckdb")}"
+    XlsxWriter.write(xlsx, Seq(
+      XlsxWriter.Sheet("Big", Seq("id", "s"), (1 to 300).map(i => Seq(i.toDouble, s"b$i"))),
+      XlsxWriter.Sheet("Tiny", Seq("id"), (1 to 7).map(i => Seq(i.toDouble))),
+      XlsxWriter.Sheet("Mid Sheet", Seq("id", "ok"), (1 to 40).map(i => Seq(i.toDouble, i % 2 == 0)))))
+    XlsxToDatabase.load(spark, xlsx, url).map(t => (t.sheet, t.table, t.rows)) shouldBe Seq(
+      ("Big", "big", 300L), ("Tiny", "tiny", 7L), ("Mid Sheet", "mid_sheet", 40L))
+    Seq("big", "tiny", "mid_sheet").map(dump(url, _).size) shouldBe Seq(300, 7, 40)
+  }
+
+  test("sheets that sanitize to one table end as a sequential per-sheet load would leave it") {
+    val dir = Files.createTempDirectory("etl9")
+    val xlsx = dir.resolve("book.xlsx").toString
+    XlsxWriter.write(xlsx, Seq(
+      XlsxWriter.Sheet("Sales Data", Seq("id", "v"), (1 to 5).map(i => Seq(i.toDouble, s"first$i"))),
+      XlsxWriter.Sheet("sales-data", Seq("id", "v"), (1 to 3).map(i => Seq(i + 10.0, s"second$i")))))
+    val sheets = XlsxToDatabase.sheetNames(xlsx)
+    sheets.map(XlsxToDatabase.sanitizeTableName).distinct shouldBe Seq("sales_data")
+    for (mode <- Seq(SaveMode.Overwrite, SaveMode.Append, SaveMode.Ignore)) {
+      val batch = s"jdbc:duckdb:${dir.resolve(s"batch_$mode.duckdb")}"
+      val seq = s"jdbc:duckdb:${dir.resolve(s"seq_$mode.duckdb")}"
+      val loaded = XlsxToDatabase.load(spark, xlsx, batch, mode).map(_.rows)
+      val sequential = sheets.map(sh => DuckDbBulkLoad.write(
+        XlsxToDatabase.readSheet(spark, xlsx, sh), seq, "sales_data", mode))
+      loaded shouldBe sequential
+      dump(batch, "sales_data") shouldBe dump(seq, "sales_data")
+    }
+  }
+
+  test("upsert reports the sheet's row count (no second scan)") {
+    val dir = Files.createTempDirectory("etl10")
+    val url = s"jdbc:duckdb:${dir.resolve("t.duckdb")}"
+    val v1 = dir.resolve("v1.xlsx").toString
+    XlsxWriter.write(v1, Seq(XlsxWriter.Sheet("People", Seq("id", "name"),
+      (1 to 6).map(i => Seq(i.toDouble, s"p$i")))))
+    XlsxToDatabase.load(spark, v1, url, upsertKeys = Some(Seq("id"))).map(_.rows) shouldBe Seq(6L)
+    // 2 updated + 1 new key: the report is the sheet's rows, not the table's
+    val v2 = dir.resolve("v2.xlsx").toString
+    XlsxWriter.write(v2, Seq(XlsxWriter.Sheet("People", Seq("id", "name"),
+      Seq(Seq(1.0, "x"), Seq(2.0, "y"), Seq(7.0, "z")))))
+    XlsxToDatabase.load(spark, v2, url, upsertKeys = Some(Seq("id"))).map(_.rows) shouldBe Seq(3L)
+    dump(url, "people").size shouldBe 7
+  }
+
+  test("CLI --export writes BIGINT columns as longs, exactly") {
+    val dir = Files.createTempDirectory("etl11")
+    val url = s"jdbc:duckdb:${dir.resolve("t.duckdb")}"
+    val big = Seq(3000000000L, -4000000000L, 9007199254740992L)
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      st.execute("CREATE TABLE wide (k BIGINT, name VARCHAR)")
+      st.execute(s"INSERT INTO wide VALUES ${big.map(v => s"($v, 'n$v')").mkString(", ")}")
+    } finally c.close()
+    XlsxToDatabase.readJdbc(spark, url, "wide").schema("k").dataType shouldBe
+      org.apache.spark.sql.types.LongType
+    val out = dir.resolve("export").toString
+    Main.run(spark, Main.Args(out, url, SaveMode.Overwrite, None, Some("wide"), "unused"))
+      .map(_.rows) shouldBe Seq(3L)
+    // within 2^53 a double holds every long exactly
+    spark.read.format("xlsx").load(out).collect()
+      .map(r => (r.getDouble(0).toLong, r.getString(1))).toSeq.sorted shouldBe
+      big.map(v => (v, s"n$v")).sorted
+  }
+
+  test("CLI --export reports the sink's count: 0 for an empty table, 0 when Ignore skips") {
+    val dir = Files.createTempDirectory("etl12")
+    val url = s"jdbc:duckdb:${dir.resolve("t.duckdb")}"
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      st.execute("CREATE TABLE empty_t (id INTEGER, name VARCHAR)")
+      st.execute("CREATE TABLE full_t AS SELECT range AS id, 'x' || range AS name FROM range(25)")
+    } finally c.close()
+    val empty = dir.resolve("empty").toString
+    Main.run(spark, Main.Args(empty, url, SaveMode.Overwrite, None, Some("empty_t"), "unused"))
+      .map(_.rows) shouldBe Seq(0L)
+    val books = new java.io.File(empty).listFiles().filter(_.getName.endsWith(".xlsx"))
+    books.length shouldBe 1 // header-only workbook: the schema still round-trips
+    val back = spark.read.format("xlsx").load(empty)
+    back.columns.toSeq shouldBe Seq("id", "name")
+    back.count() shouldBe 0
+    val full = dir.resolve("full").toString
+    Main.run(spark, Main.Args(full, url, SaveMode.Overwrite, None, Some("full_t"), "unused"))
+      .map(_.rows) shouldBe Seq(25L)
+    Main.run(spark, Main.Args(full, url, SaveMode.Ignore, None, Some("full_t"), "unused"))
+      .map(_.rows) shouldBe Seq(0L)
+  }
 }

@@ -3,6 +3,7 @@ package graft.xlsx
 import java.nio.file.Files
 import java.sql.Timestamp
 import graft.TestSpark
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -118,7 +119,8 @@ class XlsxSinkSpec extends AnyFunSuite with Matchers {
     }
     try {
       val df = (1 to 60).map(i => (i.toDouble, s"v$i")).toDF("k", "v").repartition(3)
-      df.write.format("xlsx").save(dir)
+      // the reported count is per partition id: a duplicate never counts twice
+      XlsxSink.write(df, dir, SaveMode.ErrorIfExists, "Sheet1") shouldBe 60L
     } finally XlsxSink.onTaskStaged = _ => ()
     val files = new java.io.File(dir).listFiles()
     // exactly one PUBLISHED workbook per partition; the duplicate
@@ -139,5 +141,10 @@ class XlsxSinkSpec extends AnyFunSuite with Matchers {
     val zip = new java.util.zip.ZipFile(f)
     try XlsxParser.parseWorkbook(zip).sheets.map(_.name) shouldBe Seq("mydata")
     finally zip.close()
+  }
+
+  test("write reports the rows it committed") {
+    val df = (1 to 100).map(i => (i.toLong, s"n$i")).toDF("id", "name").repartition(3)
+    XlsxSink.write(df, tmp(), SaveMode.ErrorIfExists, "s") shouldBe 100L
   }
 }
